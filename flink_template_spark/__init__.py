@@ -16,6 +16,10 @@ aggregator; see SURVEY.md) as an idiomatic Spark engine:
                    windowed aggregates; reference: TripAggregatorApplication.kt).
 - ``sinks``      — foreachBatch upsert sink with schema validation
                    (reference: jdbc/JDBCOutputFormat.kt etc.).
+- ``zipcache``   — stops Python workers re-reading ``pyspark.zip`` on
+                   every task (Python < 3.13); installed on import.
 """
+
+from flink_template_spark import zipcache  # noqa: F401  (installs on import)
 
 __version__ = "0.1.0"

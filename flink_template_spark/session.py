@@ -19,6 +19,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else about 60% of the host's
+    MemTotal in MiB, leaving the rest for the Python workers and the OS;
+    ``16g`` where ``meminfo`` is unreadable. A heap larger than RAM turns
+    a Java OOM into a kernel kill."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) * 6 // 10 // 1024}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "flink_template_spark",
     master: str | None = None,
@@ -60,7 +77,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # the \r-based console progress bar corrupts piped stdout
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

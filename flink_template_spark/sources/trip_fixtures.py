@@ -10,13 +10,18 @@ event type, unknown pidData key, invalid enum, duplicate timestamps
 from __future__ import annotations
 
 import json
+from datetime import datetime, timedelta
+
+_T0 = datetime(2017, 9, 1, 12)
 
 
 def _ts(second: float, offset: str = "-05:00") -> str:
+    """Wall time ``second`` seconds after 12:00 local, with millis."""
     base_min = int(second // 60)
     sec = second - 60 * base_min
     frac = "" if sec == int(sec) else f".{int(round((sec % 1) * 1000)):03d}"
-    return f"2017-09-01T12:{base_min:02d}:{int(sec):02d}{frac}{offset}"
+    clock = _T0 + timedelta(minutes=base_min, seconds=int(sec))
+    return f"{clock:%Y-%m-%dT%H:%M:%S}{frac}{offset}"
 
 
 def _start(trip: int, second: float, vin: str, protocol: str = "CAN11Bit") -> str:

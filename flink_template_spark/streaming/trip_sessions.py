@@ -20,6 +20,12 @@ State stays bounded per key (the reference's retention bound, SURVEY.md
 INSERT (the reference's TreeSet behavior) — state is bounded by the
 session's distinct timestamps, not raw event count — and are dropped on
 every emit.
+
+Input: the operator reads 7 columns of the parsed stream, ``trip_id, ts,
+event_type, vin, speed_kmh, lat, lon`` (``INPUT_COLUMNS``), and projects
+to them before the stateful node, so the nested ``pid`` struct and the
+other parse columns are never Arrow-encoded for the Python side. The
+fold over a key's rows is column-wise numpy, not a per-row loop.
 """
 
 from __future__ import annotations
@@ -28,15 +34,19 @@ import math
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.group import GroupedData
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 MIN_RETENTION_MS = 10
 MAX_RETENTION_MS = 4000
 STOPPED_SPEED_KMH = 5
+
+INPUT_COLUMNS = ["trip_id", "ts", "event_type", "vin", "speed_kmh", "lat", "lon"]
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -133,6 +143,17 @@ _STATE_FIELDS = [
 ]
 
 
+def _first_new(ts: np.ndarray, has: np.ndarray, known: list) -> np.ndarray:
+    """Indices, in arrival order, of the rows that carry a reading
+    (``has``) at a timestamp that no earlier row and no ``known`` entry
+    holds: the reference's TreeSet insert, where the first arrival wins."""
+    idx = np.flatnonzero(has)
+    idx = idx[np.sort(np.unique(ts[idx], return_index=True)[1])]
+    if known:
+        idx = idx[~np.isin(ts[idx], np.asarray(known, dtype=np.int64))]
+    return idx
+
+
 def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
     """Fold a batch of rows into the (possibly existing) session
     buffers. Returns the updated buffers plus the max event-time seen,
@@ -147,29 +168,30 @@ def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
         gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh = [], [], [], [], []
         vin, n_events, deadline_ms = None, 0, 0
 
-    max_event_ms = 0
-    # membership sets make the Q4 insert-dedup O(1) per event
-    gps_known, sp_known = set(gps_ts), set(sp_ts)
-    for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            n_events += 1
-            if row.event_type == "TripStartRelativeTime" and vin is None:
-                vin = row.vin
-            ts = int(row.ts.value // 1_000)  # pandas ns → us
-            max_event_ms = max(max_event_ms, ts // 1_000)
-            if row.lat is not None and not pd.isna(row.lat) and ts not in gps_known:
-                gps_known.add(ts)
-                gps_ts.append(ts)
-                gps_lat.append(float(row.lat))
-                gps_lon.append(float(row.lon))
-            if (
-                row.speed_kmh is not None
-                and not pd.isna(row.speed_kmh)
-                and ts not in sp_known
-            ):
-                sp_known.add(ts)
-                sp_ts.append(ts)
-                sp_kmh.append(int(row.speed_kmh))
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return (
+            gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms, 0,
+        )
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    n_events += len(pdf)
+    if vin is None:
+        starts = pdf["vin"][(pdf["event_type"] == "TripStartRelativeTime").to_numpy()]
+        vin = next((v for v in starts if v is not None), None)
+    ts = pdf["ts"].to_numpy(dtype="datetime64[ns]").view(np.int64) // 1_000  # ns → us
+    max_event_ms = max(0, int(ts.max()) // 1_000)
+
+    lat = pdf["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
+    lon = pdf["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
+    g = _first_new(ts, ~np.isnan(lat), gps_ts)
+    gps_ts += ts[g].tolist()
+    gps_lat += lat[g].tolist()
+    gps_lon += lon[g].tolist()
+
+    kmh = pdf["speed_kmh"].to_numpy(dtype=np.float64, na_value=np.nan)
+    k = _first_new(ts, ~np.isnan(kmh), sp_ts)
+    sp_ts += ts[k].tolist()
+    sp_kmh += kmh[k].astype(np.int64).tolist()
     return (
         gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms,
         max_event_ms,
@@ -206,6 +228,16 @@ def _session_fn(
     yield  # pragma: no cover — makes this a generator
 
 
+def keyed_trips(parsed_stream: DataFrame, watermark: str) -> GroupedData:
+    """The stateful operators' input: the ``INPUT_COLUMNS`` of the parsed
+    stream, watermarked on ``ts`` and grouped by ``trip_id``."""
+    return (
+        parsed_stream.select(*INPUT_COLUMNS)
+        .withWatermark("ts", watermark)
+        .groupBy("trip_id")
+    )
+
+
 def sessionize_trips(
     parsed_stream: DataFrame, watermark: str = "3 seconds"
 ) -> DataFrame:
@@ -218,8 +250,7 @@ def sessionize_trips(
     TripAggregatorApplication.kt:168-174); firing remains purely
     processing-time-driven (the reference's onEventTime is CONTINUE)."""
     return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("trip_id")
+        keyed_trips(parsed_stream, watermark)
         .applyInPandasWithState(
             _session_fn,
             OUTPUT_SCHEMA,
@@ -248,8 +279,17 @@ def _session_fn_event_time(
     # event-time session gap: the deadline only ever moves FORWARD to
     # last-event-time + gap (late rows below the old deadline don't
     # shrink it); fires when the watermark passes it — replay-
-    # deterministic, unlike any wall-clock rule.
-    deadline_ms = max(deadline_ms, max_event_ms + MAX_RETENTION_MS)
+    # deterministic, unlike any wall-clock rule. A row one batch behind
+    # passes the late-row filter (last batch's watermark) but can sit
+    # more than the gap below this batch's watermark, for a closed trip
+    # (W6: a late event re-opens a session) or one whose deadline this
+    # watermark passed; Spark rejects a timeout below the watermark, so
+    # the deadline is clamped to it and the session fires next batch.
+    deadline_ms = max(
+        deadline_ms,
+        max_event_ms + MAX_RETENTION_MS,
+        state.getCurrentWatermarkMs(),
+    )
     state.update(
         (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
     )
@@ -270,8 +310,7 @@ def sessionize_trips_event_time(
     session, the event-time gap reproduces production sessions exactly).
     """
     return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("trip_id")
+        keyed_trips(parsed_stream, watermark)
         .applyInPandasWithState(
             _session_fn_event_time,
             OUTPUT_SCHEMA,

@@ -46,8 +46,10 @@ from flink_template_spark.streaming.trip_sessions import (
     MIN_RETENTION_MS,
     OUTPUT_SCHEMA,
     STATE_SCHEMA,
+    _STATE_FIELDS,
     _finalize,
     _fold,
+    keyed_trips,
 )
 
 ROCKSDB_PROVIDER = (
@@ -98,15 +100,7 @@ class TripSessionProcessor(StatefulProcessor):
         # FIRE_AND_PURGE (ProcessingTimeTrigger.kt:15-24): emit the final
         # aggregate and drop all keyed state.
         (trip_id,) = key
-        st = dict(
-            zip(
-                [
-                    "gps_ts", "gps_lat", "gps_lon", "sp_ts", "sp_kmh",
-                    "vin", "n_events", "deadline_ms",
-                ],
-                prev,
-            )
-        )
+        st = dict(zip(_STATE_FIELDS, prev))
         self._session.clear()
         return iter((_finalize(trip_id, st),))
 
@@ -121,8 +115,7 @@ def sessionize_trips_v2(
     state API v2. Same observable behavior as ``sessionize_trips``; the
     session's Spark conf must include :func:`rocksdb_conf`."""
     return (
-        parsed_stream.withWatermark("ts", watermark)
-        .groupBy("trip_id")
+        keyed_trips(parsed_stream, watermark)
         .transformWithStateInPandas(
             statefulProcessor=TripSessionProcessor(),
             outputStructType=OUTPUT_SCHEMA,

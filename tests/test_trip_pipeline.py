@@ -16,7 +16,9 @@ from flink_template_spark.operators.trip_agg import aggregate_trips
 from flink_template_spark.sources.trip_fixtures import (
     TRIP1_POINTS,
     TRIP2_POINTS,
+    _ts,
     write_fixture,
+    write_scaled_fixture,
 )
 
 
@@ -227,3 +229,26 @@ def test_event_data_surface_opt_in(spark):
     assert ed.fence.data.type == "End"  # time-fence variant of the union
     assert ed.fence.data.durationInMinutes == 30
     assert ed.fence.data.geoFenceId is None  # geo-fence fields unpopulated
+
+
+def _ts_within_the_hour(second: float, offset: str = "-05:00") -> str:
+    """The fixture clock before it rolled the hour: exact below 3600 s."""
+    base_min = int(second // 60)
+    sec = second - 60 * base_min
+    frac = "" if sec == int(sec) else f".{int(round((sec % 1) * 1000)):03d}"
+    return f"2017-09-01T12:{base_min:02d}:{int(sec):02d}{frac}{offset}"
+
+
+def test_fixture_clock_rolls_the_hour():
+    assert _ts(3600) == "2017-09-01T13:00:00-05:00"
+    assert _ts(3725.25) == "2017-09-01T13:02:05.250-05:00"
+    seconds = [s / 4 for s in range(4 * 3600)] + [0.001, 12.345, 3599.999]
+    for s in seconds:
+        assert _ts(s) == _ts_within_the_hour(s), s
+    assert _ts(12, "+00:00") == _ts_within_the_hour(12, "+00:00")
+
+
+def test_scaled_fixture_keeps_events_past_the_hour(spark, tmp_path):
+    path = str(tmp_path / "long.jsonl")
+    n = write_scaled_fixture(path, n_trips=2, events_per_trip=1900, n_shards=1)
+    assert read_trip_events_json(spark, path).count() == n
