@@ -139,9 +139,10 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign every vector to its max-cosine centroid (rounded
     similarity + centroid id tiebreak for determinism).
-    Degenerate vectors/centroids (zero-norm / NaN / Inf) are excluded
-    (functions.vector.valid_vec) — every IVF/semdedup/knn-IVF consumer
-    inherits the guard from here; consumers whose output is a KEEP-SET
+    Degenerate vectors/centroids (zero-norm / NaN / Inf,
+    functions.vector.valid_vec) and centroids with a NULL id are
+    excluded — every IVF/semdedup/knn-IVF consumer inherits the guard
+    from here; consumers whose output is a KEEP-SET
     (semdedup) therefore also exclude them, so pipelines that must not
     lose rows should route df.filter(~valid_vec(col)) separately.
     ``keep_cols`` rides extra input columns through the argmax (the
@@ -160,7 +161,7 @@ def ivf_assign(
     pair rows AND the window's full id-partitioned Exchange+Sort are
     gone; the assignment is a pure projection over the corpus scan."""
     c_rows = (
-        centroids.filter(valid_vec(F.col(vec_col)))
+        centroids.filter(valid_vec(F.col(vec_col)) & F.col(centroid_id).isNotNull())
         .select(centroid_id, vec_col)
         .collect()
     )

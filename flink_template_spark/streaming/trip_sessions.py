@@ -9,6 +9,11 @@ FIRE_AND_PURGE + clear()                    → emit on timeout + state.remove()
 AggregateFunction add/getResult             → buffered state + pandas finalize
   (TripAggregatorApplication.kt:58-164)
 
+One state function, ``_session_fn``, serves both timeout policies. The
+only difference between them is the deadline rule it is handed (``arm``):
+``_arm_processing_time`` (the reference's trigger) or ``_arm_event_time``
+(the watermark-driven dual for replays).
+
 Re-arm rule (ProcessingTimeTrigger.kt:30-42): on an element, if there is
 no deadline, or the existing deadline is closer than now+min_retention,
 register a timer at now+max_retention; otherwise keep the existing
@@ -31,7 +36,8 @@ fold over a key's rows is column-wise numpy, not a per-row loop.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 from typing import Any
 
 import numpy as np
@@ -42,9 +48,10 @@ from pyspark.sql.group import GroupedData
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_template_spark.operators.trip_agg import STOPPED_SPEED_KMH
+
 MIN_RETENTION_MS = 10
 MAX_RETENTION_MS = 4000
-STOPPED_SPEED_KMH = 5
 
 INPUT_COLUMNS = ["trip_id", "ts", "event_type", "vin", "speed_kmh", "lat", "lon"]
 
@@ -89,21 +96,15 @@ def _haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
 
 
 def _finalize(trip_id: int, st: dict[str, Any]) -> pd.DataFrame:
-    """A6-A9 over the session state (already ts-deduped on insert;
-    intended semantics — see operators.trip_agg for the quirk ledger)."""
-    gps_seen = {
-        ts: (la, lo)
-        for ts, la, lo in zip(st["gps_ts"], st["gps_lat"], st["gps_lon"])
-    }
-    sp_seen = dict(zip(st["sp_ts"], st["sp_kmh"]))
-
-    gps = sorted(gps_seen.items())
+    """A6-A9 over the session state (already ts-deduped on insert, so
+    each buffer's timestamps are unique; intended semantics — see
+    operators.trip_agg for the quirk ledger)."""
+    gps = sorted(zip(st["gps_ts"], st["gps_lat"], st["gps_lon"]))
     dist = sum(
-        _haversine_km(gps[i - 1][1][0], gps[i - 1][1][1], gps[i][1][0], gps[i][1][1])
-        for i in range(1, len(gps))
+        _haversine_km(a[1], a[2], b[1], b[2]) for a, b in zip(gps, gps[1:])
     )
 
-    sp = sorted(sp_seen.items())
+    sp = sorted(zip(st["sp_ts"], st["sp_kmh"]))
     stopped_us = 0
     run_start = None
     prev_ts = None
@@ -119,7 +120,7 @@ def _finalize(trip_id: int, st: dict[str, Any]) -> pd.DataFrame:
     if run_start is not None:
         stopped_us += prev_ts - run_start
 
-    all_ts = [t for t, _ in gps] + [t for t, _ in sp]
+    all_ts = [*st["gps_ts"], *st["sp_ts"]]
     total_s = (max(all_ts) // 1_000_000 - min(all_ts) // 1_000_000) if all_ts else 0
     stopped_s = stopped_us // 1_000_000
     return pd.DataFrame(
@@ -137,12 +138,6 @@ def _finalize(trip_id: int, st: dict[str, Any]) -> pd.DataFrame:
     )
 
 
-_STATE_FIELDS = [
-    "gps_ts", "gps_lat", "gps_lon", "sp_ts", "sp_kmh",
-    "vin", "n_events", "deadline_ms",
-]
-
-
 def _first_new(ts: np.ndarray, has: np.ndarray, known: list) -> np.ndarray:
     """Indices, in arrival order, of the rows that carry a reading
     (``has``) at a timestamp that no earlier row and no ``known`` entry
@@ -157,9 +152,7 @@ def _first_new(ts: np.ndarray, has: np.ndarray, known: list) -> np.ndarray:
 def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
     """Fold a batch of rows into the (possibly existing) session
     buffers. Returns the updated buffers plus the max event-time seen,
-    in epoch ms (0 if the batch had no rows). Shared by the
-    applyInPandasWithState operator here and the transformWithState
-    processor in trip_sessions_v2."""
+    in epoch ms (0 if the batch had no rows)."""
     if prev is not None:
         gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms = prev
         gps_ts, gps_lat, gps_lon = list(gps_ts), list(gps_lat), list(gps_lon)
@@ -198,34 +191,59 @@ def _fold(prev: tuple | None, pdfs: Iterator[pd.DataFrame]):
     )
 
 
-def _ingest(state: GroupState, pdfs: Iterator[pd.DataFrame]):
-    return _fold(state.get if state.exists else None, pdfs)
+def _arm_processing_time(
+    state: GroupState, deadline_ms: int, max_event_ms: int
+) -> int:
+    """ProcessingTimeTrigger re-arm rule (ProcessingTimeTrigger.kt:30-42):
+    with no deadline, or one closer than now + MIN_RETENTION_MS, arm
+    now + MAX_RETENTION_MS; otherwise keep the existing deadline."""
+    now = state.getCurrentProcessingTimeMs()
+    if deadline_ms == 0 or deadline_ms < now + MIN_RETENTION_MS:
+        deadline_ms = now + MAX_RETENTION_MS
+    state.setTimeoutDuration(max(int(deadline_ms - now), 1))
+    return deadline_ms
+
+
+def _arm_event_time(state: GroupState, deadline_ms: int, max_event_ms: int) -> int:
+    """Event-time session gap: the deadline only ever moves FORWARD to
+    last-event-time + gap (late rows below the old deadline don't
+    shrink it); fires when the watermark passes it — replay-
+    deterministic, unlike any wall-clock rule. A row one batch behind
+    passes the late-row filter (last batch's watermark) but can sit
+    more than the gap below this batch's watermark, for a closed trip
+    (W6: a late event re-opens a session) or one whose deadline this
+    watermark passed; Spark rejects a timeout below the watermark, so
+    the deadline is clamped to it and the session fires next batch."""
+    deadline_ms = max(
+        deadline_ms,
+        max_event_ms + MAX_RETENTION_MS,
+        state.getCurrentWatermarkMs(),
+    )
+    state.setTimeoutTimestamp(deadline_ms)
+    return deadline_ms
+
+
+Arm = Callable[[GroupState, int, int], int]
 
 
 def _session_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, arm: Arm
 ) -> Iterator[pd.DataFrame]:
+    """On timeout emit the session and purge it (FIRE_AND_PURGE);
+    otherwise fold the rows into the state and let ``arm`` set the
+    key's next deadline."""
     (trip_id,) = key
     if state.hasTimedOut:
-        st = dict(zip(_STATE_FIELDS, state.get))
+        st = dict(zip(STATE_SCHEMA.fieldNames(), state.get))
         state.remove()
         yield _finalize(trip_id, st)
         return
 
-    (
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms, _
-    ) = _ingest(state, pdfs)
-
-    # ProcessingTimeTrigger re-arm rule (ProcessingTimeTrigger.kt:30-42)
-    now = state.getCurrentProcessingTimeMs()
-    if deadline_ms == 0 or deadline_ms < now + MIN_RETENTION_MS:
-        deadline_ms = now + MAX_RETENTION_MS
-    state.update(
-        (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
+    *buffers, deadline_ms, max_event_ms = _fold(
+        state.get if state.exists else None, pdfs
     )
-    state.setTimeoutDuration(max(int(deadline_ms - now), 1))
-    return
-    yield  # pragma: no cover — makes this a generator
+    deadline_ms = arm(state, deadline_ms, max_event_ms)
+    state.update((*buffers, deadline_ms))
 
 
 def keyed_trips(parsed_stream: DataFrame, watermark: str) -> GroupedData:
@@ -235,6 +253,14 @@ def keyed_trips(parsed_stream: DataFrame, watermark: str) -> GroupedData:
         parsed_stream.select(*INPUT_COLUMNS)
         .withWatermark("ts", watermark)
         .groupBy("trip_id")
+    )
+
+
+def _sessionize(
+    parsed_stream: DataFrame, watermark: str, arm: Arm, timeout: str
+) -> DataFrame:
+    return keyed_trips(parsed_stream, watermark).applyInPandasWithState(
+        partial(_session_fn, arm=arm), OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
     )
 
 
@@ -248,54 +274,17 @@ def sessionize_trips(
     The 3 s event-time watermark is the reference's W1
     (BoundedOutOfOrdernessTimestampExtractor,
     TripAggregatorApplication.kt:168-174); firing remains purely
-    processing-time-driven (the reference's onEventTime is CONTINUE)."""
-    return (
-        keyed_trips(parsed_stream, watermark)
-        .applyInPandasWithState(
-            _session_fn,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    processing-time-driven (the reference's onEventTime is CONTINUE).
+
+    Not for bounded replays: under ``trigger(availableNow=True)`` the
+    ProcessingTimeTimeout keeps the query scheduling empty ~0.75 s
+    batches while any session is open (146 empty batches in 120 s at 5k
+    events), so the query never terminates. Replays use
+    ``sessionize_trips_event_time``."""
+    return _sessionize(
+        parsed_stream, watermark, _arm_processing_time,
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def _session_fn_event_time(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (trip_id,) = key
-    if state.hasTimedOut:
-        st = dict(zip(_STATE_FIELDS, state.get))
-        state.remove()
-        yield _finalize(trip_id, st)
-        return
-
-    (
-        gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms,
-        max_event_ms,
-    ) = _ingest(state, pdfs)
-
-    # event-time session gap: the deadline only ever moves FORWARD to
-    # last-event-time + gap (late rows below the old deadline don't
-    # shrink it); fires when the watermark passes it — replay-
-    # deterministic, unlike any wall-clock rule. A row one batch behind
-    # passes the late-row filter (last batch's watermark) but can sit
-    # more than the gap below this batch's watermark, for a closed trip
-    # (W6: a late event re-opens a session) or one whose deadline this
-    # watermark passed; Spark rejects a timeout below the watermark, so
-    # the deadline is clamped to it and the session fires next batch.
-    deadline_ms = max(
-        deadline_ms,
-        max_event_ms + MAX_RETENTION_MS,
-        state.getCurrentWatermarkMs(),
-    )
-    state.update(
-        (gps_ts, gps_lat, gps_lon, sp_ts, sp_kmh, vin, n_events, deadline_ms)
-    )
-    state.setTimeoutTimestamp(deadline_ms)
-    return
-    yield  # pragma: no cover — makes this a generator
 
 
 def sessionize_trips_event_time(
@@ -309,13 +298,7 @@ def sessionize_trips_event_time(
     clock — a processing-time trigger would merge everything into one
     session, the event-time gap reproduces production sessions exactly).
     """
-    return (
-        keyed_trips(parsed_stream, watermark)
-        .applyInPandasWithState(
-            _session_fn_event_time,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _sessionize(
+        parsed_stream, watermark, _arm_event_time,
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -2,14 +2,15 @@
 
 The 15 streaming modules were pytest-verified but carried no measured
 throughput, so optimization rounds structurally could not touch them
-and a perf regression there was invisible. This harness gives the three
+and a perf regression there was invisible. This harness gives two
 representative stateful shapes a recorded events/s surface:
 
 - ``ingest_dedup``   docs/s through the foreachBatch LSH ingest gate
                      (MinHash banding + index join + parquet append);
-- ``trip_sessions``  events/s through keyed GroupState sessionization
-                     (applyInPandasWithState, processing-time timers);
 - ``kmv_stream``     events/s through the per-batch KMV sketch append.
+
+The keyed trip sessionizer is measured by ``perfbench`` (workload
+``trip_stream``), not here.
 
 Method mirrors bench.py's trip-pipeline dual: availableNow (bounded)
 runs over deterministic fixtures, one untimed warm run per stream
@@ -65,44 +66,6 @@ def main() -> None:
             results[name] = max(rates)
         except Exception as exc:  # isolate per stream
             errors[name] = f"{type(exc).__name__}: {str(exc)[:300]}"
-
-    # ---- trip_sessions: keyed GroupState sessionization ------------------
-    # Measured through the EVENT-TIME dual (sessionize_trips_event_time):
-    # a bounded replay is exactly the backfill case its docstring names.
-    # The processing-time variant is UNBENCHABLE under availableNow —
-    # probed r13: ProcessingTimeTimeout keeps the query scheduling empty
-    # ~0.75 s batches indefinitely (146 empty batches / 120 s at 5k
-    # events, never terminating), so a wall-clock rate would measure
-    # timer idling, not processing. Both variants share _ingest/_finalize
-    # and the state schema, so the per-event stateful work measured here
-    # is the same code the processing-time path runs per batch.
-    from flink_template_spark.parse import read_trip_events_stream
-    from flink_template_spark.sources.trip_fixtures import write_scaled_fixture
-    from flink_template_spark.streaming.trip_sessions import (
-        sessionize_trips_event_time,
-    )
-
-    trips_dir = os.path.join(work, "trip_events")
-    n_trip_events = write_scaled_fixture(
-        trips_dir, n_trips=4000, events_per_trip=50, n_shards=cpus
-    )
-
-    def run_trip(tag: str) -> None:
-        ckpt = os.path.join(work, f"trip_ckpt_{tag}")
-        q = (
-            sessionize_trips_event_time(read_trip_events_stream(spark, trips_dir))
-            .writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("trip_sessions availableNow exceeded 600s")
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    record("trip_sessions", n_trip_events, run_trip)
 
     # ---- ingest_dedup: LSH gate over a JSONL doc stream ------------------
     from pyspark.sql import types as T
@@ -195,7 +158,6 @@ def main() -> None:
         "streams": results,
         "samples": samples,
         "fixture": {
-            "trip_sessions": n_trip_events,
             "ingest_dedup": n_docs,
             "kmv_stream": n_kmv_events,
         },

@@ -1,6 +1,7 @@
 """The trip sessionizer's Python side: the column-wise fold against the
-per-row fold it replaced, the 7-column input of the stateful node, and a
-row one micro-batch behind the watermark."""
+per-row fold it replaced, the state function's two deadline rules and
+its timeout emit (on a fake GroupState, no Spark), the 7-column input of
+the stateful node, and a row one micro-batch behind the watermark."""
 
 from __future__ import annotations
 
@@ -15,7 +16,14 @@ from flink_template_spark.parse import read_trip_events_stream
 from flink_template_spark.sources.trip_fixtures import _data, _start
 from flink_template_spark.streaming.trip_sessions import (
     INPUT_COLUMNS,
+    MAX_RETENTION_MS,
+    MIN_RETENTION_MS,
+    STATE_SCHEMA,
+    _arm_event_time,
+    _arm_processing_time,
+    _finalize,
     _fold,
+    _session_fn,
     sessionize_trips,
     sessionize_trips_event_time,
 )
@@ -161,6 +169,111 @@ def test_fold_first_arrival_wins_and_vin_from_first_trip_start():
     assert sp_ts == [us, us + 1_000_000] and sp_kmh == [9, 60]
     assert (vin, n_events, deadline, max_ms) == ("VIN_A", 12, 500, us // 1000 + 2000)
     assert _fold(None, iter([])) == _row_fold(None, iter([]))
+
+
+class FakeState:
+    """The part of pyspark's GroupState the state function uses. Like
+    Spark, it rejects a timeout timestamp below the watermark."""
+
+    def __init__(self, now_ms=0):
+        self.value, self.now_ms, self.watermark_ms = None, now_ms, 0
+        self.hasTimedOut = False
+        self.duration_ms = self.timestamp_ms = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now_ms
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def setTimeoutDuration(self, ms):
+        self.duration_ms = ms
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms >= self.watermark_ms, "timeout below the watermark"
+        self.timestamp_ms = ms
+
+
+T0 = pd.Timestamp("2017-09-01 17:00:00")
+T0_MS = T0.value // 1_000_000
+
+
+def _reading(second: int) -> pd.DataFrame:
+    return pd.DataFrame(
+        [(7, T0 + pd.Timedelta(seconds=second), "TripData", None, 30.0, 19.4, -99.1)],
+        columns=INPUT_COLUMNS,
+    )
+
+
+def _step(state: FakeState, arm, second: int = 0) -> int:
+    """One call of the state function with one reading; returns the
+    stored deadline."""
+    assert list(_session_fn((7,), iter([_reading(second)]), state, arm)) == []
+    return state.get[-1]
+
+
+def test_processing_time_arm_follows_the_reference_rearm_rule():
+    now = 1_000_000
+    state = FakeState(now_ms=now)
+    assert _step(state, _arm_processing_time) == now + MAX_RETENTION_MS
+    assert state.duration_ms == MAX_RETENTION_MS
+    assert state.get[6] == 1  # n_events: the row was folded in
+
+    deadline = now + MAX_RETENTION_MS
+    # an armed deadline at least MIN_RETENTION_MS away is kept ...
+    for t in (now + 1000, deadline - MIN_RETENTION_MS):
+        state.now_ms = t
+        assert _step(state, _arm_processing_time) == deadline
+        assert state.duration_ms == deadline - t
+    # ... a closer one is re-armed at now + MAX_RETENTION_MS
+    state.now_ms = deadline - MIN_RETENTION_MS + 1
+    assert _step(state, _arm_processing_time) == state.now_ms + MAX_RETENTION_MS
+    assert state.duration_ms == MAX_RETENTION_MS
+    assert state.timestamp_ms is None
+
+
+def test_event_time_arm_moves_forward_and_clamps_to_the_watermark():
+    state = FakeState()
+    first = T0_MS + 10_000 + MAX_RETENTION_MS
+    assert _step(state, _arm_event_time, second=10) == first
+    assert state.timestamp_ms == first
+    # a late reading does not pull the deadline back
+    assert _step(state, _arm_event_time, second=2) == first
+    # a later one pushes it forward
+    assert _step(state, _arm_event_time, second=20) == first + 10_000
+    # a watermark past every candidate deadline is the deadline
+    state.watermark_ms = first + 60_000
+    assert _step(state, _arm_event_time, second=21) == first + 60_000
+    assert state.timestamp_ms == first + 60_000
+    assert state.duration_ms is None
+
+
+@pytest.mark.parametrize("arm", [_arm_processing_time, _arm_event_time])
+def test_timed_out_key_emits_one_row_and_removes_its_state(arm):
+    state = FakeState(now_ms=T0_MS)
+    for second in (0, 3, 6):
+        _step(state, arm, second)
+    st = dict(zip(STATE_SCHEMA.fieldNames(), state.get))
+    state.hasTimedOut = True
+    out = list(_session_fn((7,), iter([]), state, arm))
+    assert len(out) == 1 and len(out[0]) == 1
+    pd.testing.assert_frame_equal(out[0], _finalize(7, st))
+    assert (out[0].n_events[0], out[0].total_s[0]) == (3, 6)
+    assert not state.exists
 
 
 def _stateful_input(df) -> list[str]:
